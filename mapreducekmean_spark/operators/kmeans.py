@@ -24,11 +24,17 @@ Scale notes: the per-iteration shuffle carries only k×(d sums + count)
 after partial aggregation — independent of input row count, so the plan is
 scan-bound at 100 TB. Centroids travel as a plan literal (constant-folded,
 broadcast with the task binary), never via driver round-trips per task.
+
+The iterative driver ``lloyd`` runs the same math on cached numpy blocks
+instead (no per-iteration planning) through ``_lloyd_blocks``, the
+engine's one Lloyd block loop; PQ training (``pq.train_pq_codebooks``)
+runs on it too, with its own per-block kernel.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -277,8 +283,9 @@ def lloyd(
 ) -> LloydResult:
     """R14 — the full iterative driver loop, Spark-first.
 
-    Structure mirrors ``KMeans.java:204-234``: one distributed job per
-    iteration (assignment + aggregation), k×d floats collected to the
+    Structure mirrors ``KMeans.java:204-234`` (run by ``_lloyd_blocks``):
+    one distributed job per iteration (assignment + aggregation) — one
+    job in all for a one-partition input — k×d floats collected to the
     driver, convergence = every coordinate of every centroid moved < tol
     (``KMeans.java:102-111``). Differences (SURVEY §2.1): correctly
     weighted partial aggregation (R8) and deterministic init (R3).
@@ -297,26 +304,16 @@ def lloyd(
             f"k={k} exceeds the {len(cents)} distinct input points; "
             f"reduce k or supply more points"
         )
-    blocks = _numpy_blocks(points)
-    # Caching pays off only when the loop re-reads the blocks across
-    # per-iteration jobs; the one-partition path runs exactly one job.
-    cache = blocks.getNumPartitions() > 1
-    if cache:
-        blocks = blocks.cache()
-    try:
-        cents, history, converged, it = _iterate(
-            blocks, cents, k, max_iter, tol
-        )
-    finally:
-        if cache:
-            blocks.unpersist()
-    return LloydResult(cents, it, converged, history)
+    C, history, converged, it = _lloyd_blocks(
+        _numpy_blocks(points), cents, _block_partials, max_iter, tol
+    )
+    return LloydResult(C.tolist(), it, converged, history)
 
 
 def _numpy_blocks(points: DataFrame):
     """The hot-loop representation: (ids, X) numpy blocks. Built once per
-    ``lloyd`` call and cached — the same row-major matrix blocking MLlib
-    uses for its Lloyd loop.
+    Lloyd run and cached by ``_lloyd_blocks`` — the same row-major matrix
+    blocking MLlib uses for its Lloyd loop.
 
     The build is columnar end-to-end: ``mapInArrow`` delivers Arrow
     record batches to the Python worker (no per-row Row objects), the
@@ -374,10 +371,8 @@ def _numpy_blocks(points: DataFrame):
 
 def _block_partials(X, C):
     """Per-block Lloyd partials: (k×d sums, k counts) of the nearest-
-    centroid assignment of ``X`` against ``C``. The ONE copy of the
-    iteration math — both the distributed per-iteration jobs and the
-    single-task loop call this, so their arithmetic is identical by
-    construction.
+    centroid assignment of ``X`` against ``C`` — the k-means
+    ``partials`` kernel of ``_lloyd_blocks``.
 
     Exactness: squared-L2 accumulates per-dimension (``acc += d*d`` one
     dimension at a time), bit-identical to the sequential HOF fold in
@@ -409,7 +404,7 @@ def _block_partials(X, C):
 def _advance(C, sums, counts, tol):
     """One centroid update step: empty clusters keep the previous
     centroid (``KMeans.java:129-144``); movement is the max per-coordinate
-    abs delta (``KMeans.java:102-111``). Shared by both loop drivers."""
+    abs delta (``KMeans.java:102-111``)."""
     import numpy as np
 
     new = C.copy()  # empty clusters keep the previous centroid
@@ -419,39 +414,50 @@ def _advance(C, sums, counts, tol):
     return new, move, move < tol
 
 
-def _loop_over_blocks(blks, C, max_iter, tol):
-    """The Lloyd loop over an in-memory list of (ids, X) blocks — the
-    single-partition body. Partials fold left in block order, exactly the
-    order a one-partition ``treeReduce`` folds its per-block results, so
-    the centroids are bit-identical to the distributed path's."""
+def _add_pairs(a, b):
+    return a[0] + b[0], a[1] + b[1]
+
+
+def _tree_sum(rdd):
+    """Element-wise sum of an RDD of pairs in one ``treeReduce``. Tree
+    depth scales with partition count like MLlib's treeAggregate: a
+    depth-2 merge bounds driver fan-in at ~sqrt(P) for the
+    1000-executor case; below ~64 partitions a single reduce suffices
+    (measured equivalent at fixture scale — the loop there is bounded
+    by per-job scheduling latency, ~0.2 s/iter, not by the merge)."""
+    depth = 1 if rdd.getNumPartitions() <= 64 else 2
+    return rdd.treeReduce(_add_pairs, depth=depth)
+
+
+def _converge(C, step, max_iter, tol):
+    """The Lloyd driver loop (``KMeans.java:204-234``): ``step(C)``
+    returns the (sums, counts) partials of one pass, ``_advance`` turns
+    them into the next centroids, and the loop stops once every
+    coordinate moved < tol."""
     history: list[float] = []
     converged = False
     it = 0
     for it in range(1, max_iter + 1):
-        sums = counts = None
-        for _ids, X in blks:
-            s, c = _block_partials(X, C)
-            if sums is None:
-                sums, counts = s, c
-            else:
-                sums = sums + s
-                counts = counts + c
-        if sums is None:
-            raise ValueError("empty input: no blocks to iterate over")
-        C, move, done = _advance(C, sums, counts, tol)
+        C, move, converged = _advance(C, *step(C), tol)
         history.append(move)
-        if done:
-            converged = True
+        if converged:
             break
     return C, history, converged, it
 
 
-def _iterate(blocks, cents, k, max_iter, tol):
-    """The per-iteration engine: broadcast C, one ``treeReduce`` of
-    (k×d sums, k counts) per iteration — the map→combine→shuffle→reduce
-    of ``KMeans.java:207-215`` with nothing but the k×(d+1) partial
-    aggregates crossing the wire (depth-2 tree merge = the 1000-executor
-    shape, exactly MLlib's ``RDD.treeAggregate`` strategy).
+def _lloyd_blocks(blocks, C0, partials, max_iter, tol):
+    """The one Lloyd block-loop driver, shared by ``lloyd`` and PQ
+    training (``pq.train_pq_codebooks``). ``blocks`` is a
+    ``_numpy_blocks`` RDD, ``C0`` the (r, d) initial centroid rows and
+    ``partials(X, C)`` the per-block (r×d sums, r counts) kernel.
+    Returns ``(C, history, converged, iterations)`` with C an (r, d)
+    float64 array.
+
+    Per iteration: broadcast C, one ``_tree_sum`` of the per-block
+    partials — the map→combine→shuffle→reduce of ``KMeans.java:207-215``
+    with nothing but the r×(d+1) partial aggregates crossing the wire
+    (MLlib's ``RDD.treeAggregate`` strategy). The blocks are cached for
+    the loop's duration and re-read by every iteration's job.
 
     Why RDD and not the DataFrame agg here: the declared one-step
     operators (``assign_nearest``/``centroid_update``) keep the
@@ -463,55 +469,45 @@ def _iterate(blocks, cents, k, max_iter, tol):
     iteration planning: ≈0.21 s/iter measured, same assignments
     (0 mismatches over 20 iterations at sf0.1).
 
-    Adaptive single-task fold: when ``blocks`` has ONE partition, every
-    per-iteration job is a one-task job whose reduce is just that
-    partition's left fold — so the whole loop runs inside a single task
-    (``mapPartitions`` over the same blocks, same ``_block_partials`` /
-    ``_advance`` math, same fold order → bit-identical centroids),
-    turning up-to-20 jobs into 1. This build's Python-task floor is
-    ~150 ms/job regardless of work, so the collapse is worth ~3 s at
-    fixture scale; on production inputs (many partitions) the
-    distributed per-iteration loop below runs unchanged.
+    Single-task fold: when ``blocks`` has ONE partition, every
+    per-iteration job would be a one-task job whose reduce is just that
+    partition's left fold — so the whole loop runs inside a single
+    ``mapPartitions`` task instead, with the same kernel, update and
+    fold order → bit-identical centroids, and one job instead of up to
+    ``max_iter``. This build's Python-task floor is ~150 ms/job
+    regardless of work, so the collapse is worth ~3 s at fixture scale;
+    it also skips the cache, which only pays when jobs re-read blocks.
     """
     import numpy as np
 
-    sc = blocks.context
-    C = np.array(cents, dtype=np.float64)
-    k_, dim = C.shape
-    history: list[float] = []
-    converged = False
-    it = 0
+    C = np.asarray(C0, dtype=np.float64)
     if blocks.getNumPartitions() == 1:
-        max_iter_, tol_ = max_iter, tol
 
         def run(parts_iter):
-            yield _loop_over_blocks(list(parts_iter), C, max_iter_, tol_)
+            blks = [X for _ids, X in parts_iter]
+            if not blks:
+                raise ValueError("empty input: no blocks to iterate over")
 
-        C, history, converged, it = blocks.mapPartitions(run).collect()[0]
-        return [list(map(float, c)) for c in C], history, converged, it
-    # tree depth scales with partition count like MLlib's treeAggregate:
-    # a depth-2 merge bounds driver fan-in at ~sqrt(P) for the
-    # 1000-executor case; below ~64 partitions a single reduce suffices
-    # (measured equivalent at fixture scale — the loop there is bounded
-    # by per-job scheduling latency, ~0.2 s/iter, not by the merge)
-    depth = 1 if blocks.getNumPartitions() <= 64 else 2
-    for it in range(1, max_iter + 1):
+            def fold(C):
+                return reduce(_add_pairs, (partials(X, C) for X in blks))
+
+            yield _converge(C, fold, max_iter, tol)
+
+        return blocks.mapPartitions(run).collect()[0]
+    sc = blocks.context
+    blocks = blocks.cache()
+
+    def step(C):
         bc = sc.broadcast(C)
+        try:
+            return _tree_sum(blocks.map(lambda b: partials(b[1], bc.value)))
+        finally:
+            bc.unpersist()
 
-        def part(block):
-            _ids, X = block
-            return _block_partials(X, bc.value)
-
-        sums, counts = blocks.map(part).treeReduce(
-            lambda x, y: (x[0] + y[0], x[1] + y[1]), depth=depth
-        )
-        bc.unpersist()
-        C, move, done = _advance(C, sums, counts, tol)
-        history.append(move)
-        if done:
-            converged = True
-            break
-    return [list(map(float, c)) for c in C], history, converged, it
+    try:
+        return _converge(C, step, max_iter, tol)
+    finally:
+        blocks.unpersist()
 
 
 def lloyd_assignments(

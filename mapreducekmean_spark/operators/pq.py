@@ -20,10 +20,10 @@ Spark mapping — deliberately the same shapes as the oracle-checked
 K-Means core, just M codebooks at once:
 
 - **training** is Lloyd over all M subspaces SIMULTANEOUSLY on the
-  ``kmeans._numpy_blocks`` hot-loop representation (Arrow-built
+  k-means block-loop driver ``kmeans._lloyd_blocks`` (Arrow-built
   cached numpy blocks — MLlib's own strategy): per iteration, the
-  codebook array broadcasts with the closure and ONE ``treeReduce``
-  returns (m×k×ds sums, m×k counts) — centroid_update's bounded
+  codebooks broadcast as m·k centroid rows and ONE ``treeReduce``
+  returns (m·k×ds sums, m·k counts) — centroid_update's bounded
   combine payload times M, with zero per-iteration Catalyst planning;
 - **init** is the md5-deterministic k-sample (``deterministic_init``'s
   ordering), so training is reproducible run to run with no RNG;
@@ -131,92 +131,39 @@ def train_pq_codebooks(
         return codebooks
     import numpy as np
 
-    # the kmeans hot-loop representation: Arrow-built numpy blocks,
-    # cached once, then one treeReduce of (m×k×ds sums, m×k counts)
-    # per iteration — M codebooks' worth of centroid_update's bounded
-    # combine, with ZERO per-iteration planning (the per-iteration
-    # state is a broadcast numpy array, never a new Catalyst plan).
-    # Adaptive single-task fold (optimization r14 — the kmeans._iterate
-    # pattern): with ONE partition each per-iteration treeReduce is
-    # that partition's left fold, so the whole ``iters``-pass loop
-    # runs inside a single mapPartitions task — same _pq_block_partials
-    # kernel, same _pq_advance update, same block fold order →
-    # bit-identical codebooks; multi-partition (production) inputs run
-    # the distributed per-iteration loop unchanged.
-    blocks = km._numpy_blocks(points.select("vec_id", "emb"))
-    if blocks.getNumPartitions() == 1:
-        iters_, m_, k_, ds_ = iters, m, k, ds
-        cb0 = codebooks
+    # Lloyd over all M subspaces at once on the kmeans._lloyd_blocks
+    # driver: the (m, k, ds) codebooks travel as m·k centroid rows of
+    # width ds, so the shared _advance update (empty cells keep their
+    # previous centroid) applies row by row; tol=0.0 never stops early,
+    # so training runs exactly ``iters`` passes.
+    def partials(X, C):
+        return _pq_block_partials(X, C.reshape(m, k, ds))
 
-        def run(parts_iter):
-            yield _pq_loop_over_blocks(
-                list(parts_iter), cb0, iters_, m_, k_, ds_
-            )
-
-        return blocks.mapPartitions(run).collect()[0]
-    blocks = blocks.cache()
-    try:
-        for _ in range(iters):
-            cb = np.asarray(codebooks)  # (m, k, ds)
-
-            def part(block, cb=cb, m=m, k=k, ds=ds):
-                return _pq_block_partials(block[1], cb, m, k, ds)
-
-            sums, counts = blocks.map(part).treeReduce(
-                lambda a, b: (a[0] + b[0], a[1] + b[1])
-            )
-            codebooks = _pq_advance(codebooks, sums, counts, m, k)
-    finally:
-        blocks.unpersist()
-    return codebooks
+    C = km._lloyd_blocks(
+        km._numpy_blocks(points.select("vec_id", "emb")),
+        np.asarray(codebooks).reshape(m * k, ds),
+        partials,
+        iters,
+        0.0,
+    )[0]
+    return C.reshape(m, k, ds).tolist()
 
 
-def _pq_block_partials(X, cb, m, k, ds):
-    """Per-block PQ-training partials: (m×k×ds sums, m×k counts) of
-    the per-subspace nearest-code assignment. The ONE copy of the
-    iteration math — shared by the distributed per-iteration jobs and
-    the single-task loop, so their arithmetic is identical."""
+def _pq_block_partials(X, cb):
+    """Per-block PQ-training partials of the per-subspace nearest-code
+    assignment against the (m, k, ds) codebooks, as (m·k×ds sums, m·k
+    counts) — one row per (subspace, code), the row layout
+    ``kmeans._lloyd_blocks`` updates."""
     import numpy as np
 
+    m, k, ds = cb.shape
     codes = _codes_np(X, cb)
     sums = np.zeros((m, k, ds))
     counts = np.zeros((m, k), dtype=np.int64)
     for s in range(m):
         np.add.at(sums[s], codes[:, s], X[:, s * ds : (s + 1) * ds])
         np.add.at(counts[s], codes[:, s], 1)
-    return sums, counts
-
-
-def _pq_advance(codebooks, sums, counts, m, k):
-    """One codebook update: empty cells keep their previous centroid.
-    Shared by both loop drivers."""
-    for s in range(m):
-        for c in range(k):
-            if counts[s, c]:
-                codebooks[s][c] = (sums[s, c] / counts[s, c]).tolist()
-    return codebooks
-
-
-def _pq_loop_over_blocks(blks, codebooks, iters, m, k, ds):
-    """The PQ training loop over an in-memory block list — the
-    single-partition body; partials fold left in block order, exactly
-    the order a one-partition treeReduce folds its per-block results."""
-    import numpy as np
-
-    for _ in range(iters):
-        cb = np.asarray(codebooks)
-        sums = counts = None
-        for _ids, X in blks:
-            s_, c_ = _pq_block_partials(X, cb, m, k, ds)
-            if sums is None:
-                sums, counts = s_, c_
-            else:
-                sums = sums + s_
-                counts = counts + c_
-        if sums is None:
-            raise ValueError("empty input: no blocks to train over")
-        codebooks = _pq_advance(codebooks, sums, counts, m, k)
-    return codebooks
+    return sums.reshape(m * k, ds), counts.reshape(m * k)
 
 
 def pq_encode(
@@ -391,9 +338,7 @@ def pq_reconstruction_mse(
         return total, X.shape[0]
 
     blocks = km._numpy_blocks(points.select("vec_id", "emb"))
-    total, n = blocks.map(part).treeReduce(
-        lambda a, b: (a[0] + b[0], a[1] + b[1])
-    )
+    total, n = km._tree_sum(blocks.map(part))
     return total / n
 
 

@@ -4090,9 +4090,11 @@ def probe_core(spark, results: dict, args) -> None:
         "sec": round(dt, 2),
         "rows_per_sec": int(args.vecs / dt),
     }
-    km._iterate(blocks, cents, 10, 1, 0.0)  # warm
+    km._lloyd_blocks(blocks, cents, km._block_partials, 1, 0.0)  # warm
+    blocks.cache().count()  # _lloyd_blocks unpersists the blocks on exit
     t0 = time.perf_counter()
-    km._iterate(blocks, cents, 10, 1, 0.0)  # tol=0 -> exactly 1 iteration
+    # tol=0 -> exactly 1 iteration
+    km._lloyd_blocks(blocks, cents, km._block_partials, 1, 0.0)
     dt = time.perf_counter() - t0
     blocks.unpersist()
     results["lloyd_iteration_block_loop"] = {

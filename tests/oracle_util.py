@@ -94,3 +94,31 @@ def compare_query(spark, sf_dir: str, query) -> list[str]:
             f"values differ; spark-only sample={diff_s} duckdb-only sample={diff_d}"
         )
     return problems
+
+
+def md5_init(points, k: int):
+    """The (vec_id, emb) table as an (n, d) float64 matrix, plus a copy of
+    its ``k`` rows first in ``md5(str(vec_id))`` order — the engine's
+    deterministic init (``stable_order_key``), computed without Spark."""
+    import hashlib
+
+    import numpy as np
+
+    rows = sorted(
+        (hashlib.md5(str(r.vec_id).encode()).hexdigest(), r.vec_id, list(r.emb))
+        for r in points.select("vec_id", "emb").collect()
+    )
+    X = np.array([emb for _h, _id, emb in rows], dtype=np.float64)
+    return X, X[:k].copy()
+
+
+def sq_dists(X, C):
+    """(n, k) squared L2 between the rows of X and C, accumulated one
+    dimension at a time like the engine's kernels."""
+    import numpy as np
+
+    d = np.zeros((X.shape[0], C.shape[0]))
+    for j in range(X.shape[1]):
+        diff = X[:, j : j + 1] - C[None, :, j]
+        d += diff * diff
+    return d

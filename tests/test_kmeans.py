@@ -7,10 +7,12 @@ import json
 import math
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from mapreducekmean_spark.operators import kmeans as km
+from tests.oracle_util import md5_init, sq_dists
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "kmeans_sf0001.json")
 
@@ -76,6 +78,28 @@ def test_assignment_idempotent_at_convergence(points):
         for a, b in zip(oc, nc)
     )
     assert move < km.DEFAULT_TOL
+
+
+@pytest.mark.parametrize(
+    "partitions",
+    [pytest.param(None, id="single_task"), pytest.param(4, id="distributed")],
+)
+def test_lloyd_matches_numpy_reference(points, partitions):
+    """Both paths of the block-loop driver — the single-task fold (the
+    fixture is one partition) and the per-iteration broadcast +
+    treeReduce (4 partitions) — equal a numpy Lloyd from the same md5
+    init."""
+    pts = points if partitions is None else points.repartition(partitions)
+    assert km._numpy_blocks(pts).getNumPartitions() == (partitions or 1)
+    got = km.lloyd(pts, k=10, max_iter=3, tol=0.0)
+    X, C = md5_init(points, 10)
+    for _ in range(3):
+        a = np.argmin(sq_dists(X, C), axis=1)
+        for j in range(10):
+            if (a == j).any():
+                C[j] = X[a == j].mean(axis=0)
+    assert (got.iterations, got.converged) == (3, False)
+    np.testing.assert_allclose(got.centroids, C, rtol=1e-9, atol=1e-9)
 
 
 def test_empty_cluster_keeps_previous_centroid(spark):

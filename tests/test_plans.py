@@ -124,6 +124,23 @@ def _plan(df):
     return formatted_plan(df)
 
 
+def _windows_above_corpus_agg(plan: str) -> bool:
+    """True if the plan has a Window and none is numbered before its
+    first HashAggregate — i.e. the windows run over the aggregated level
+    table, not per document. Formatted-mode ids number the tree
+    children first, so a per-document window feeding the corpus
+    aggregation would carry a smaller id."""
+    import re
+
+    ids = {}
+    for line in plan.splitlines():
+        m = re.match(r"^\((\d+)\) (\w+)", line.strip())
+        if m:
+            ids.setdefault(m.group(2), []).append(int(m.group(1)))
+    windows = ids.get("Window", [])
+    return bool(windows) and min(windows) > min(ids.get("HashAggregate", [0]))
+
+
 def test_word_count_partial_agg_before_both_exchanges(spark, sf_small):
     """The canonical MR workload: map-side partial aggregation must sit
     below the token-keyed exchange (stopword skew absorbed at the
@@ -664,29 +681,30 @@ def test_dedup_apply_best_hash_agg_no_sort(spark, sf_small):
 def test_quality_deciles_level_table_only(spark, sf_small):
     """The decile calibration must do ALL its work on the distinct
     quality level table: one corpus aggregation, then only
-    level-table-sized operators — the two joins are the broadcast
-    10-row/1-row threshold attaches, never a corpus-volume side, and
-    there is no per-doc window (the single-partition window runs over
-    the level table, bounded by the score's 6-dp precision)."""
+    level-table-sized operators — the deciles are closed-form per level
+    row, so there is no join at all, and there is no per-doc window
+    (the single-partition windows run over the level table, bounded by
+    the score's 6-dp precision)."""
     df = REG["quality_deciles"].fn(spark, sf_small)
-    assert count_joins(df) == 2
+    assert count_joins(df) == 0
     plan = _plan(df)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+    assert _windows_above_corpus_agg(plan)
 
 
 def test_host_stats_level_table_arithmetic(spark, sf_small):
     """The per-source report must aggregate the corpus ONCE to the
     (source, content_hash) level and do everything else on level
-    tables: exactly one join (level x corpus-count, both
-    distinct-content-sized — never a corpus-volume side), hash
+    tables: no join (the corpus-wide content count is a window sum
+    over the level table, never a corpus-volume side), hash
     aggregates throughout (partial agg absorbs hot content groups
     map-side), no sort-based fallback."""
     df = REG["host_stats"].fn(spark, sf_small)
-    assert count_joins(df) == 1
+    assert count_joins(df) == 0
     plan = _plan(df)
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan
+    assert _windows_above_corpus_agg(plan)
 
 
 def test_gopher_quality_is_map_only(spark, sf_small):
@@ -800,11 +818,11 @@ def test_video_dhash_real_is_map_only(spark, sf_small):
 
 def test_host_stats_delta_report_is_level_table_only(spark, sf_small):
     """The maintained report must read the landed snapshot (level
-    rows), never a corpus: exactly one join (the level x level dup
-    accounting), hash aggregates throughout — the host_stats pin
-    applied to the snapshot-backed variant."""
+    rows), never a corpus: no join (the dup accounting is a window sum
+    over the snapshot levels), hash aggregates throughout — the
+    host_stats pin applied to the snapshot-backed variant."""
     df = REG["host_stats_delta"].fn(spark, sf_small)
-    assert count_joins(df) == 1
+    assert count_joins(df) == 0
     plan = _plan(df)
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan
@@ -827,10 +845,10 @@ def test_dataset_importance_broadcasts_bucket_ratios(spark, sf_small):
 def test_quality_deciles_delta_report_is_level_table_only(spark, sf_small):
     """The maintained decile report must read the landed LEVEL
     snapshot, never a corpus — same join budget as the one-shot
-    (the two broadcast threshold attaches) with its window over the
-    snapshot levels."""
+    (none: closed-form deciles) with its windows over the snapshot
+    levels."""
     df = REG["quality_deciles_delta"].fn(spark, sf_small)
-    assert count_joins(df) == 2
+    assert count_joins(df) == 0
     plan = _plan(df)
     assert "SortMergeJoin" not in plan
 

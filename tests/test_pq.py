@@ -5,11 +5,13 @@ against the exact neighbors."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from mapreducekmean_spark.operators import kmeans as km
 from mapreducekmean_spark.operators.pq import (
+    PQ_ITERS,
     PQ_K,
     PQ_M,
     pq_adc_topk,
@@ -17,6 +19,7 @@ from mapreducekmean_spark.operators.pq import (
     pq_reconstruction_mse,
     train_pq_codebooks,
 )
+from tests.oracle_util import md5_init, sq_dists
 
 
 def _pts(spark, sf_dir):
@@ -31,6 +34,31 @@ def test_training_is_deterministic_and_shaped(spark, sf_small):
     assert len(cb1) == PQ_M
     assert all(len(cb) == PQ_K for cb in cb1)
     assert all(len(code) == 64 // PQ_M for cb in cb1 for code in cb)
+
+
+@pytest.mark.parametrize(
+    "partitions",
+    [pytest.param(None, id="single_task"), pytest.param(4, id="distributed")],
+)
+def test_training_matches_numpy_reference(spark, sf_small, partitions):
+    """Both paths of the shared block-loop driver train the codebooks a
+    numpy per-subspace Lloyd computes from the same md5 init."""
+    pts = _pts(spark, sf_small)
+    if partitions is not None:
+        pts = pts.repartition(partitions)
+    assert km._numpy_blocks(pts).getNumPartitions() == (partitions or 1)
+    got = train_pq_codebooks(pts, 64)
+    X, seed = md5_init(pts, PQ_K)
+    ds = 64 // PQ_M
+    cb = seed.reshape(PQ_K, PQ_M, ds).transpose(1, 0, 2).copy()
+    for _ in range(PQ_ITERS):
+        for s in range(PQ_M):
+            xs = X[:, s * ds : (s + 1) * ds]
+            codes = np.argmin(sq_dists(xs, cb[s]), axis=1)
+            for c in range(PQ_K):
+                if (codes == c).any():
+                    cb[s, c] = xs[codes == c].mean(axis=0)
+    np.testing.assert_allclose(got, cb, rtol=1e-9, atol=1e-9)
 
 
 def test_encoding_matches_sequential_python_oracle(spark, sf_small):
